@@ -8,8 +8,9 @@ Run from the root of a checkout. The first run builds the library and the
 benchmark with sbt (offline) into the checkout; later runs reuse the build
 while the sources are unchanged. The JVM side (perfbench/src) times the
 workload and writes a result file; this script then checks every batch
-query's output against its DuckDB oracle (SparkEntry.oracleSql) and prints
-one JSON line: {"correct", "attempted", "failed", "metrics"}.
+query's output against its DuckDB oracle (SparkEntry.oracleSql) with the
+repo's tools/check_oracle.py and prints one JSON line:
+{"correct", "attempted", "failed", "metrics"}.
 """
 import argparse
 import hashlib
@@ -32,6 +33,7 @@ NOT_RUN = {
 DEADLINE_S = 170  # seconds a run may take after the build
 BUILD_DEADLINE_S = 600  # seconds the sbt build may take
 BENCH = Path("perfbench")
+DATA = BENCH / "data"
 WORK = Path(".bench_build")
 # Matches org.apache.spark.launcher.JavaModuleOptions: Spark on JDK 17
 # outside spark-submit needs these.
@@ -110,10 +112,13 @@ def run_jvm(classpath, args, run_dir, deadline):
     cmd += ["-cp", classpath, "perfbench.Main",
             "--workload", args.workload, "--seed", str(args.seed),
             "--seconds", str(args.seconds), "--trace", str(args.trace),
-            "--cores", str(os.cpu_count()), "--data", str(BENCH / "data"),
-            "--work", str(WORK / "work"), "--run-dir", str(run_dir)]
+            "--cores", str(os.cpu_count()), "--data", str(DATA),
+            "--run-dir", str(run_dir)]
     log = run_dir / "jvm.log"
     with open(log, "w") as out:
+        # setup_s runs from here: the JVM's launch is part of what a
+        # one-shot user waits for.
+        cmd += ["--launched-ns", str(time.time_ns())]
         proc = subprocess.Popen(cmd, stdout=out, stderr=subprocess.STDOUT,
                                 start_new_session=True)
 
@@ -135,48 +140,35 @@ def run_jvm(classpath, args, run_dir, deadline):
     return json.loads((run_dir / "result.json").read_text())
 
 
-def oracle_check(result, cache_dir):
-    """Compares each query output with its DuckDB oracle the way
-    tools/check_oracle.py does: columns by name, rows as a multiset, values
-    exact. Oracle results depend only on the fixed inputs and are cached.
-    Returns [(query, executions, why)] for every mismatch."""
-    import duckdb
-    con = duckdb.connect()
-    tables = result["info"]["tables"]
-    for name, path in tables.items():
-        con.sql(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}/**/*.parquet')"
-                if Path(path).is_dir() else
-                f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
-    bad = []
-    for q in result["oracle"]:
-        name, runs, sql = q["name"], q["executions"], q["sql"]
-        if sql is None:
-            bad.append((name, runs, "no oracle SQL"))
-            continue
-        key = hashlib.sha256(json.dumps([sql, sorted(
-            (t, os.path.getsize(p) if Path(p).is_file() else
-             sum(f.stat().st_size for f in Path(p).rglob("*.parquet")))
-            for t, p in tables.items())]).encode()).hexdigest()[:20]
-        cached = cache_dir / f"{name}-{key}.parquet"
-        try:
-            if not cached.exists():
-                tmp = cached.with_suffix(".tmp")
-                con.sql(f"COPY ({sql}) TO '{tmp}' (FORMAT parquet)")
-                tmp.rename(cached)
-            got = con.sql(f"SELECT * FROM read_parquet('{q['path']}/*.parquet')")
-            exp = con.sql(f"SELECT * FROM read_parquet('{cached}')")
-            if sorted(got.columns) != sorted(exp.columns):
-                bad.append((name, runs, f"columns {sorted(got.columns)} vs {sorted(exp.columns)}"))
-                continue
-            cols = ", ".join(f'"{c}"' for c in sorted(got.columns))
-            g = f"SELECT {cols} FROM read_parquet('{q['path']}/*.parquet')"
-            e = f"SELECT {cols} FROM read_parquet('{cached}')"
-            extra = con.sql(f"SELECT count(*) FROM ({g} EXCEPT ALL {e})").fetchone()[0]
-            missing = con.sql(f"SELECT count(*) FROM ({e} EXCEPT ALL {g})").fetchone()[0]
-            if extra or missing:
-                bad.append((name, runs, f"{extra} rows not in the oracle, {missing} oracle rows missing"))
-        except Exception as ex:  # an oracle that cannot run is a failed check
-            bad.append((name, runs, f"{type(ex).__name__}: {ex}"))
+def oracle_check(result, run_dir, deadline):
+    """Checks the cold pass's query outputs (<run_dir>/out/<query>) against
+    their DuckDB oracles with tools/check_oracle.py: columns by name, rows
+    sorted, values exact. Returns [(query, executions, why)] for every query
+    that did not pass, a query without oracle SQL included."""
+    out = run_dir / "out"
+    runs = {q["name"]: q["executions"] for q in result["oracle"]}
+    sql = {q["name"]: q["sql"] for q in result["oracle"] if q["sql"] is not None}
+    bad = [(n, runs[n], "no oracle SQL") for n in runs if n not in sql]
+    if not sql:
+        return bad
+    (out / "oracle_sql.json").write_text(json.dumps(sql))
+    try:
+        proc = subprocess.run([sys.executable, "tools/check_oracle.py", str(DATA), str(out), *sql],
+                              capture_output=True, text=True,
+                              timeout=max(1.0, deadline - time.monotonic()))
+    except subprocess.TimeoutExpired:
+        fail("the oracle check overran the run's deadline")
+    passed, why = set(), {}
+    for line in proc.stdout.splitlines():
+        if line.startswith("PASS "):
+            passed.update(line.partition(":")[2].split())
+        elif line.startswith("FAIL "):
+            name, _, msg = line[len("FAIL "):].partition(": ")
+            why[name] = msg
+    for name in sql:
+        if name not in passed:
+            bad.append((name, runs[name], why.get(
+                name, f"not reported by check_oracle.py (exit {proc.returncode}): {proc.stderr[-500:]}")))
     return bad
 
 
@@ -201,10 +193,8 @@ def main():
     run_dir.mkdir(parents=True)
     result = run_jvm(classpath, args, run_dir, deadline)
 
-    cache = WORK / "work" / "oracle"
-    cache.mkdir(parents=True, exist_ok=True)
     failed, failures = result["failed"], list(result["failures"])
-    for name, runs, why in oracle_check(result, cache):
+    for name, runs, why in oracle_check(result, run_dir, deadline):
         failed += runs
         failures.append(f"{name}: {why}")
     for f in failures:
@@ -219,12 +209,11 @@ def main():
         values = result["metrics"]
     metrics = {}
     for name, unit in units.items():
-        if name not in values:
-            fail(f"metric {name} was not measured")
-        # null is a statistic over events never emitted (+Inf), already
-        # counted as failed
-        v = values[name]
-        metrics[name] = {"value": float("inf") if v is None else v, "unit": unit}
+        # null stands for NaN or +Inf (a percentile over events never
+        # emitted): no number to report, so the run fails.
+        if values.get(name) is None:
+            fail(f"metric {name} was not measured or is not finite; failures: {failures}")
+        metrics[name] = {"value": values[name], "unit": unit}
     print(json.dumps({"info": result["info"]}), file=sys.stderr)
     for d in run_dir.iterdir():  # query outputs and streaming checkpoints
         if d.is_dir():

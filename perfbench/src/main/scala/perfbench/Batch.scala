@@ -29,8 +29,7 @@ object Batch {
   private final case class Pass(span: Int, wall: Double, traced: Boolean,
       queryWalls: Map[String, Double], window: (Long, Long), gcSeconds: Double)
 
-  def run(spark: SparkSession, cfg: Config, names: Seq[String], dir: String,
-      res: Result): Unit = {
+  def run(spark: SparkSession, cfg: Config, names: Seq[String], res: Result): Unit = {
     val registry = SparkEntry.queries
     val queries = names.map(n => n -> registry(n))
     val tracer = new Tracer
@@ -46,9 +45,9 @@ object Batch {
 
     def execute(name: String, fn: (SparkSession, String) => DataFrame, pass: Int,
         traced: Boolean, cold: Boolean): Unit =
-      if (!traced) sink(fn(spark, dir), name, cold)
+      if (!traced) sink(fn(spark, cfg.data), name, cold)
       else tracer.span(pass, "query", name) { qid =>
-        val df = tracer.span(qid, "build", name)(_ => fn(spark, dir))
+        val df = tracer.span(qid, "build", name)(_ => fn(spark, cfg.data))
         val plan = tracer.span(qid, "plan", name)(_ => df.queryExecution.executedPlan)
         exchanges += plan.treeString.linesIterator
           .count(l => l.matches(""".*\b(Exchange|BroadcastExchange) .*""") && !l.contains("Reused"))
@@ -133,9 +132,10 @@ object Batch {
       res.spans = tracer.toJsonLines
     }
 
-    // What the oracle check needs; the check itself runs after the JVM.
+    // What the oracle check needs; the check itself runs after the JVM,
+    // over the cold pass's outputs in `<runDir>/out/<query>`.
     passes.head.queryWalls.keys.foreach { name =>
-      res.oracle += Map("name" -> name, "path" -> output(name), "executions" -> executions(name),
+      res.oracle += Map("name" -> name, "executions" -> executions(name),
         "sql" -> SparkEntry.oracleSql.get(name).orNull)
     }
   }
